@@ -2,10 +2,11 @@
 
 ``entry(spark)`` runs the flagship dedup query; ``queries()`` exposes
 one callable per implemented operator (SURVEY.md §2); ``oracle_sql()``
-gives the DuckDB-replayable ANSI-SQL twin for every SQL-expressible
-operator. Hash-seeded operators (MinHash/SimHash/winnowing LSH paths)
-are rows-only by design — their correctness gate is the brute-force
-oracle comparison inside tests/ (recall >= 0.99), mirroring the
+gives a DuckDB-replayable ANSI-SQL twin for every ``queries()`` entry.
+Hash-seeded operators (MinHash/SimHash/winnowing LSH paths) are
+replayed from first principles too: their twins either recompute the
+engine-common hash in SQL or compute the exact answer the seeded path
+must recover (brute-force Jaccard, exact LCS), mirroring the
 reference's oracle methodology (src/Preprocess.cpp:107-142).
 """
 
@@ -922,7 +923,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 # ---------------------------------------------------------------------------
-# oracle_sql() — DuckDB twins (hash-seeded ops intentionally omitted)
+# oracle_sql() — DuckDB twins, one per queries() entry
 # ---------------------------------------------------------------------------
 
 _STOP_SQL = {

@@ -81,9 +81,11 @@ def pack_sequences(docs: DataFrame, budget: int,
         out["seq"] = seqs
         return out[["id", "shard", "seq", "n_tokens"]]
 
+    id_type = base.schema["id"].dataType.simpleString()
     return (
         base.groupBy("shard")
-        .applyInPandas(_pack, "id long, shard int, seq int, n_tokens int")
+        .applyInPandas(
+            _pack, f"id {id_type}, shard int, seq int, n_tokens int")
         .select(F.col("id").alias(id_col), "shard", "seq", "n_tokens")
     )
 

@@ -5,7 +5,10 @@ mutable state — SURVEY.md §2.10).
 Per batch of new pages:
 
   1. anti-join against already-seen urls (idempotent re-delivery);
-  2. signatures + bucket rows for the NEW docs only;
+  2. signatures + bucket rows for the NEW docs only — each new doc is
+     fingerprinted once, since the batch's docs, signatures and
+     verified edges are materialized once and shared by every later
+     step;
   3. candidate pairs = new-vs-all equi-join on bucket keys (the new
      docs probe the existing 'hash table', exactly like the
      reference's per-point searchLSH probe) + new-vs-new pairs;
@@ -87,8 +90,14 @@ def dedup_increment(
         old_edges = store.read("edges")
     else:
         old_docs = None
+    # every per-batch frame below feeds several consumers (the touched-
+    # key probe, both pair-filter sides, verify, metrics and all five
+    # state writes); materializing each once keeps them from re-running
+    # the anti-join and the signature UDF per consumer
+    new_docs = new_docs.localCheckpoint(eager=True)
 
-    new_sigs = compute_signatures(new_docs, cfg, id_col, text_col)
+    new_sigs = compute_signatures(
+        new_docs, cfg, id_col, text_col).localCheckpoint(eager=True)
 
     if eval_docs is not None:
         from lsh_apg_spark.operators.decontaminate import (
@@ -134,7 +143,8 @@ def dedup_increment(
         both = new_buckets
         touching_new = candidate_pairs(new_buckets, cfg, id_col)
 
-    new_edges = verify_edges(touching_new, all_sigs, cfg, id_col)
+    new_edges = verify_edges(
+        touching_new, all_sigs, cfg, id_col).localCheckpoint(eager=True)
     edges = (old_edges.unionByName(new_edges).dropDuplicates(["a", "b"])
              if have_state else new_edges)
 
@@ -147,7 +157,7 @@ def dedup_increment(
     # membership of `a` implies membership of the whole edge).
     if have_state and store.exists("clusters"):
         old_clusters = store.read("clusters")
-        ne = new_edges.select("a", "b").localCheckpoint(eager=True)
+        ne = new_edges.select("a", "b")
         touched_nodes = (
             ne.select(F.col("a").alias(id_col))
             .unionByName(ne.select(F.col("b").alias(id_col)))

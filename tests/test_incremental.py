@@ -72,6 +72,45 @@ def test_incremental_cc_bounded_by_touched_components(spark, tmp_path):
     assert _assignments(final) == _assignments(batch)
 
 
+def test_incremental_fingerprints_each_new_doc_once(spark, corpus,
+                                                   tmp_path, monkeypatch):
+    """The reference's online insert hashes each new point once
+    (insertLSHRefine); a batch onto stored state must likewise run the
+    signature UDF once per NEW url, not once per downstream consumer
+    of the lazy new-doc frames. A nondeterministic always-true filter
+    on the signatures counts the rows it sees in a Spark accumulator;
+    re-delivered urls are dropped before signing, so they count 0."""
+    from pyspark.sql import functions as F
+
+    from lsh_apg_spark.operators.signatures import compute_signatures
+    from lsh_apg_spark.streaming import incremental
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    counted = F.udf(count_row, "boolean").asNondeterministic()
+
+    def counting_signatures(docs, cfg, id_col="url", text_col="text"):
+        sigs = compute_signatures(docs, cfg, id_col, text_col)
+        return sigs.filter(counted(F.col(id_col)))
+
+    monkeypatch.setattr(incremental, "compute_signatures",
+                        counting_signatures)
+    rows = corpus.collect()
+    first = spark.createDataFrame(rows[:80], schema=PAGES_SCHEMA)
+    second = spark.createDataFrame(rows[60:], schema=PAGES_SCHEMA)
+    store = CheckpointStore(spark, str(tmp_path / "inc6"), CFG)
+    dedup_increment(spark, first, store, CFG)
+    before = seen.value
+    dedup_increment(spark, second, store, CFG, metrics={})
+    new_urls = {r["url"] for r in rows[60:]} - {r["url"] for r in rows[:80]}
+    assert new_urls
+    assert seen.value - before == len(new_urls)
+
+
 def test_structured_streaming_drain(spark, corpus, tmp_path):
     """readStream → foreachBatch(dedup_increment) with availableNow:
     drains the drop directory and lands the same assignments."""

@@ -627,6 +627,14 @@ def test_pack_sequences_contract(spark):
     assert st == {k: (len(v), sum(v)) for k, v in fills.items()}
     with _pytest.raises(ValueError):
         pack_sequences(docs, budget=0)
+    # string ids keep their type, and since shards hash the id's string
+    # form, the same ids as strings pack identically
+    sdocs = spark.createDataFrame([(str(i), t) for i, t in rows],
+                                  "doc_id string, text string")
+    sout = pack_sequences(sdocs, budget=100, n_shards=4)
+    assert sout.schema["doc_id"].dataType.simpleString() == "string"
+    assert sorted(map(tuple, sout.collect())) == sorted(
+        (str(d), sh, sq, nt) for d, sh, sq, nt in got)
 
 
 def test_semdedup_matches_reference_rule(spark):
