@@ -66,8 +66,9 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 def make_pair_score_udf(metric: str = "cosine"):
     """(vec_a, vec_b) -> double, one numpy pass per Arrow batch.
 
-    cosine: dot / (|a|*|b|); l2_sq: squared L2 (squared space end-to-
-    end like USE_SQRDIST, src/def.h:3); l1 / linf: Manhattan and
+    cosine: dot / (|a|*|b|), each norm floored at 1e-12; l2_sq:
+    squared L2 (squared space end-to-end like USE_SQRDIST,
+    src/def.h:3); l1 / linf: Manhattan and
     Chebyshev (maps fvec_L1_avx512 / fvec_Linf_avx512,
     src/distances_simd_avx512.h:29-40 — one numpy reduction per Arrow
     batch is the Spark analogue of those SIMD loops). float64
@@ -80,8 +81,11 @@ def make_pair_score_udf(metric: str = "cosine"):
             a = np.stack(va.to_numpy()).astype(np.float64)
             b = np.stack(vb.to_numpy()).astype(np.float64)
             if metric == "cosine":
+                # norms floored like the cell assignment's: a zero
+                # vector scores 0 against anything instead of NaN
                 num = np.einsum("ij,ij->i", a, b)
-                den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
+                den = (np.maximum(np.linalg.norm(a, axis=1), 1e-12)
+                       * np.maximum(np.linalg.norm(b, axis=1), 1e-12))
                 out = num / den
             elif metric == "l2_sq":
                 d = a - b

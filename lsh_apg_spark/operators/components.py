@@ -12,6 +12,12 @@ case) giving O(log n) rounds. Each round is two shuffles; each round's
 result is localCheckpoint()-ed to truncate lineage — the in-sandbox
 analogue of the per-iteration Iceberg checkpoint used at prod scale.
 
+The caller's edge plan is evaluated exactly once: one scan emits both
+directions of every edge into a materialized undirected edge list, and
+the endpoints, the initial labels (whose checksum is observed on their
+own checkpoint job) and the singleton anti-join all derive from that
+copy.
+
 Labels are the document ids themselves (min url wins), so the final
 cluster_id = min member id — deterministic and order-independent, the
 tie-break SURVEY.md §7.4 demands."""
@@ -60,20 +66,20 @@ def connected_components(
     # NB: AQE stays ON here — measured: its partition coalescing on the
     # loop's tiny 16-byte-row shuffles outweighs its per-round replan
     # cost (AQE-off was 2x slower at 16 cores).
-    e = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    # undirected: propagate both ways
-    und = e.unionByName(e.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst")))
+
+    # undirected: propagate both ways. One scan of the input emits both
+    # directions and is materialized, so the caller's edge plan (often
+    # joins over stored state) runs once, not once per consumer below
+    und = edges.select(F.explode(F.array(
+        F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+        F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+    )).alias("_e")).select("_e.*").localCheckpoint(eager=True)
 
     # only edge ENDPOINTS participate in the iteration — at web scale
     # the overwhelming majority of documents touch no candidate pair
     # and their label is trivially themselves; keeping them out of the
     # loop shrinks every per-iteration shuffle to the dup-graph size
     endpoints = und.select(F.col("src").alias("id")).distinct()
-
-    labels = endpoints.select("id", F.col("id").alias("label"))
-    labels = labels.localCheckpoint(eager=True)
-    und = und.localCheckpoint(eager=True)
 
     # convergence via a checksum OBSERVED on the checkpoint job itself:
     # labels only ever decrease (min-propagation is monotone), so an
@@ -85,7 +91,10 @@ def connected_components(
     # decimal accumulation: a sum of int64 hashes overflows LongType
     # under ANSI mode.
     chk = F.sum(F.xxhash64("id", "label").cast("decimal(38,0)")).alias("s")
-    prev = labels.agg(chk).collect()[0]["s"]
+    obs = Observation("cc_init")
+    labels = endpoints.select("id", F.col("id").alias("label")) \
+        .observe(obs, chk).localCheckpoint(eager=True)
+    prev = obs.get["s"]
     for it in range(max_iter):
         # prop: min label among self + neighbors
         nbr = (
@@ -119,7 +128,7 @@ def connected_components(
     if nodes is not None:
         singles = (
             nodes.select(F.col(id_col).alias("id"))
-            .join(endpoints, "id", "left_anti")
+            .join(labels.select("id"), "id", "left_anti")
             .select("id", F.col("id").alias("label"))
         )
         labels = labels.unionByName(singles)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from lsh_apg_spark.config import DedupConfig
 from lsh_apg_spark.functions import vectors
 from lsh_apg_spark.functions.hashing import simhash_hamming
+from lsh_apg_spark.operators import textstats
 from lsh_apg_spark.operators.components import connected_components
 
 
@@ -39,7 +40,7 @@ def shingle_rows(docs: DataFrame, k: int, id_col: str = "doc_id",
     with JVM higher-order functions (split/transform/explode). The
     SQL-portable twin of the hashed-shingle kernel: used by the
     brute-force oracle so DuckDB can replay it exactly."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    toks = textstats.tokens_col(text_col)
     idx = F.sequence(F.lit(0), F.size(toks) - k)
     sh = F.transform(idx, lambda i: F.concat_ws(
         " ", *[F.element_at(toks, i + j + 1) for j in range(k)]))

@@ -9,20 +9,27 @@ invalidates downstream stages automatically.
 
 Each checkpoint carries per-partition lineage in a sidecar JSON
 (stage name, config id, row count, per-partition row counts, wall
-time) — the north_rule's "per-partition lineage + metrics"."""
+time) — the north_rule's "per-partition lineage + metrics". The counts
+are read from the written files' parquet footers, so recording them
+runs no Spark job."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import shutil
 import time
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
+
+# Spark's data file name: part-<task number>-<job uuid>-c<file>...
+_PART_FILE = re.compile(r"part-(\d+)-")
 
 
 class CheckpointStore:
@@ -96,25 +103,28 @@ class CheckpointStore:
         return out
 
     def _finish(self, name: str, t0: float) -> DataFrame:
-        out = self.spark.read.parquet(self._path(name))
-        per_part = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count().collect()
-        )
+        # per-partition row counts come from the written files' parquet
+        # footers, not from a Spark job over the table: a part file's
+        # task number is the partition that wrote it
+        per_part: dict[int, int] = {}
+        for path in glob.glob(os.path.join(self._path(name), "part-*.parquet")):
+            pid = int(_PART_FILE.match(os.path.basename(path)).group(1))
+            per_part[pid] = per_part.get(pid, 0) + \
+                pq.read_metadata(path).num_rows
         meta = {
             "stage": name,
             "config_id": self.cfg.config_id(),
-            "rows": sum(r["count"] for r in per_part),
+            "rows": sum(per_part.values()),
             "partitions": [
-                {"partition_id": r["partition_id"], "rows": r["count"]}
-                for r in sorted(per_part, key=lambda r: r["partition_id"])
+                {"partition_id": pid, "rows": n}
+                for pid, n in sorted(per_part.items())
             ],
             "wall_sec": round(time.monotonic() - t0, 3),
             "written_at_epoch": int(time.time()),
         }
         with open(self._sidecar(name), "w") as f:
             json.dump(meta, f, indent=1)
-        return out
+        return self.spark.read.parquet(self._path(name))
 
     def get_or_create(self, name: str, builder: Callable[[], DataFrame]) -> DataFrame:
         """The ben_create contract: load if checkpointed, else build,

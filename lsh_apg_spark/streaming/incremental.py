@@ -13,7 +13,11 @@ Per batch of new pages:
      docs probe the existing 'hash table', exactly like the
      reference's per-point searchLSH probe) + new-vs-new pairs;
   4. verify against the union text corpus;
-  5. union edges, re-run CC, rewrite cluster assignments.
+  5. union edges; re-run CC over the subgraph the batch touched (the
+     old components holding a new-edge endpoint, plus the new docs),
+     built once from one scan each of the stored clusters and edges
+     and materialized for the metrics, CC and the rewrite; rewrite
+     cluster assignments.
 
 All state lives in checkpoint tables (signatures/buckets/edges/
 clusters + the pages seen so far) — every step is a pure DataFrame
@@ -21,7 +25,7 @@ job, so a crashed batch just re-runs."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
@@ -154,7 +158,10 @@ def dedup_increment(
     # new docs — everything else keeps its previous label verbatim.
     # The subgraph's old edges are recovered by one endpoint semi-join
     # (both endpoints of an old edge sit in the same old component, so
-    # membership of `a` implies membership of the whole edge).
+    # membership of `a` implies membership of the whole edge). The
+    # subgraph frames are materialized once: the metrics, CC and the
+    # clusters rewrite all read them, so the stored clusters and edges
+    # are each scanned once here and once by the rewrite.
     if have_state and store.exists("clusters"):
         old_clusters = store.read("clusters")
         ne = new_edges.select("a", "b")
@@ -162,23 +169,29 @@ def dedup_increment(
             ne.select(F.col("a").alias(id_col))
             .unionByName(ne.select(F.col("b").alias(id_col)))
             .distinct()
+            .withColumn("_hit", F.lit(True))
         )
-        touched_cids = (
-            old_clusters.join(touched_nodes, id_col, "left_semi")
-            .select("cluster_id").distinct()
-        )
+        # a component is touched iff any member is a new-edge endpoint:
+        # one scan of the stored clusters tags whole components
+        in_touched = F.max("_hit").over(Window.partitionBy("cluster_id"))
+        touched_members = (
+            old_clusters.join(touched_nodes, id_col, "left")
+            .withColumn("_touched", in_touched)
+            .filter("_touched")
+            .select(id_col, "cluster_id")
+        ).localCheckpoint(eager=True)
+        touched_cids = touched_members.select("cluster_id").distinct()
         untouched = old_clusters.join(touched_cids, "cluster_id", "left_anti")
         affected = (
-            old_clusters.join(touched_cids, "cluster_id", "left_semi")
-            .select(id_col)
+            touched_members.select(id_col)
             .unionByName(new_docs.select(id_col))
             .distinct()
-        )
+        ).localCheckpoint(eager=True)
         sub_edges = (
             old_edges.select("a", "b")
             .join(affected.select(F.col(id_col).alias("a")), "a", "left_semi")
             .unionByName(ne)
-        )
+        ).localCheckpoint(eager=True)
         if metrics is not None:
             metrics["cc_nodes"] = affected.count()
             metrics["cc_edges"] = sub_edges.count()

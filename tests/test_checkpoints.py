@@ -28,6 +28,19 @@ def test_store_roundtrip_and_lineage(spark, tmp_path):
     lin = store.lineage("t")
     assert lin["rows"] == 100 and lin["config_id"] == CFG.config_id()
     assert sum(p["rows"] for p in lin["partitions"]) == 100
+    pids = [p["partition_id"] for p in lin["partitions"]]
+    assert len(pids) == len(set(pids))
+    # row counts come from the parquet footers, one entry per writing
+    # task, whatever the partitioning
+    store.write(df.repartition(7), "t7")
+    lin7 = store.lineage("t7")
+    assert lin7["rows"] == 100
+    assert sorted(p["partition_id"] for p in lin7["partitions"]) == \
+        list(range(7))
+    assert sum(p["rows"] for p in lin7["partitions"]) == 100
+    store.write(df.limit(0), "empty")
+    assert store.lineage("empty")["rows"] == 0
+    assert store.read("empty").count() == 0
 
 
 def test_config_change_invalidates(spark, tmp_path):

@@ -111,6 +111,51 @@ def test_incremental_fingerprints_each_new_doc_once(spark, corpus,
     assert seen.value - before == len(new_urls)
 
 
+def test_incremental_scans_stored_state_at_most_twice(spark, corpus,
+                                                     tmp_path):
+    """The reference's online insert works only around the new points
+    (insertLSHRefine); a batch's re-cluster subgraph is built once, so
+    the stored clusters and edges are each scanned at most twice: once
+    to build the subgraph and once to rewrite the table. A store whose
+    reads pass through a nondeterministic always-true filter counts the
+    rows every evaluation of each stored table reads."""
+    from pyspark.sql import functions as F
+
+    seen = {name: spark.sparkContext.accumulator(0)
+            for name in ("clusters", "edges")}
+
+    class CountingStore(CheckpointStore):
+        def read(self, name):
+            df = super().read(name)
+            if name not in seen:
+                return df
+            acc = seen[name]
+
+            def count_row(_):
+                acc.add(1)
+                return True
+
+            counted = F.udf(count_row, "boolean").asNondeterministic()
+            return df.filter(counted(F.col(df.columns[0])))
+
+    rows = corpus.collect()
+    # interleaved halves, so the second batch's new edges reach into
+    # stored components
+    first = spark.createDataFrame(rows[::2], schema=PAGES_SCHEMA)
+    second = spark.createDataFrame(rows[1::2], schema=PAGES_SCHEMA)
+    store = CountingStore(spark, str(tmp_path / "inc7"), CFG)
+    dedup_increment(spark, first, store, CFG)
+    stored = {name: store.lineage(name)["rows"] for name in seen}
+    before = {name: acc.value for name, acc in seen.items()}
+    metrics: dict = {}
+    dedup_increment(spark, second, store, CFG, metrics=metrics)
+    scanned = {name: seen[name].value - before[name] for name in seen}
+    assert stored["edges"] > 0 and metrics["cc_edges"] > 0, metrics
+    for name in seen:
+        assert stored[name] <= scanned[name] <= 2 * stored[name], \
+            (name, scanned, stored)
+
+
 def test_structured_streaming_drain(spark, corpus, tmp_path):
     """readStream → foreachBatch(dedup_increment) with availableNow:
     drains the drop directory and lands the same assignments."""

@@ -703,6 +703,45 @@ def test_semdedup_matches_reference_rule(spark):
     assert e_out.columns == ["vec_id", "cell", "keep"]
 
 
+def test_semdedup_zero_norm_vector_matches_oracle(spark):
+    """A zero-norm embedding scores cosine 0 against every vector in
+    both engines (norms floored at 1e-12): the pair UDF returns 0.0,
+    not NaN/NULL, and semdedup agrees with its DuckDB replay on a
+    corpus holding a zero vector next to planted duplicates."""
+    import duckdb
+
+    from __spark_entry__ import _semdedup_oracle_sql
+    from lsh_apg_spark.functions import vectors
+
+    rng = np.random.Generator(np.random.PCG64(11))
+    base = rng.standard_normal((20, 8))
+    rows = [(i, [float(x) for x in base[i]]) for i in range(20)]
+    rows += [(100 + j, [float(x) for x in base[j]
+                        + 0.01 * rng.standard_normal(8)]) for j in range(3)]
+    rows.append((50, [0.0] * 8))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>") \
+        .localCheckpoint(eager=True)
+
+    score = vectors.make_pair_score_udf("cosine")
+    zero = df.filter("vec_id = 50").select(F.col("embedding").alias("z"))
+    scores = [r["s"] for r in df.crossJoin(zero).select(
+        score(F.col("embedding"), F.col("z")).alias("s")).collect()]
+    assert scores == [0.0] * len(rows)
+
+    # one cell: a zero vector ties every centroid, which the replay's
+    # assignment guard would (rightly) refuse to call
+    out = dedup.semdedup(df, tau=0.9, n_cells=1, iters=1, seed=3)
+    got = sorted((r["vec_id"], r["cell"], r["keep"]) for r in out.collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings(vec_id BIGINT, embedding FLOAT[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    oracle = sorted(tuple(r) for r in con.execute(
+        _semdedup_oracle_sql(0.9, 1, 1, 3, dim=8)).fetchall())
+    assert oracle == got
+    assert (50, 0, True) in got
+    assert sum(not keep for _, _, keep in got) == 3
+
+
 def test_cosine_neardup_explicit_dim_and_empty_input(spark, embeddings):
     """ADVICE r2: an explicit dim must skip the driver-side probe job
     and produce identical results; an empty input must yield an empty
@@ -717,6 +756,65 @@ def test_cosine_neardup_explicit_dim_and_empty_input(spark, embeddings):
     out = dedup.cosine_neardup_pairs(empty, 0.5)
     assert out.count() == 0
     assert out.columns == ["a", "b", "cosine"]
+
+
+def test_connected_components_reads_edge_input_once(spark):
+    """connected_components evaluates its caller's edge plan exactly
+    once — the labels, the undirected edge list and the singleton
+    anti-join all read one materialized copy. A nondeterministic
+    always-true filter on the input counts the rows each evaluation
+    reads."""
+    from lsh_apg_spark.operators.components import connected_components
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    counted = F.udf(count_row, "boolean").asNondeterministic()
+    pairs = [("a1", "a2"), ("a2", "a3"), ("a3", "a4"), ("b1", "b2"),
+             ("b2", "b3"), ("c1", "c2")]
+    edges = spark.createDataFrame(pairs, "a string, b string") \
+        .filter(counted(F.col("a")))
+    nodes = spark.createDataFrame(
+        [(x,) for x in sorted({u for p in pairs for u in p} | {"z"})],
+        "url string")
+    got = {r["url"]: r["cluster_id"]
+           for r in connected_components(edges, nodes=nodes).collect()}
+    assert got == {"a1": "a1", "a2": "a1", "a3": "a1", "a4": "a1",
+                   "b1": "b1", "b2": "b1", "b3": "b1",
+                   "c1": "c1", "c2": "c1", "z": "z"}
+    assert seen.value == len(pairs)
+
+
+def test_bruteforce_jaccard_matches_shingle_oracle_on_vertical_tab(spark):
+    """shingle_rows and the DuckDB _SHINGLES_CTE must split words on
+    the same whitespace class: Java's \\s includes \\x0b and RE2's does
+    not, so a vertical-tab document would shingle differently in the
+    two engines under the shorthand."""
+    import duckdb
+
+    from __spark_entry__ import oracle_sql
+
+    words = [f"w{i}" for i in range(12)]
+    rows = [
+        (1, " ".join(words)),
+        (2, "\x0b".join(words)),                 # vertical tabs only
+        (3, " ".join(words[:6]) + "\x0b" + " \t".join(words[6:])),
+        (4, "\x0b".join(words[:10]) + " x y"),
+        (5, "unrelated text with\x0bno overlap at all"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(tuple(r) for r in dedup.bruteforce_jaccard_pairs(
+        df, tau=0.5, k=3).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    oracle = sorted(tuple(r) for r in con.execute(
+        oracle_sql()["bruteforce_jaccard_pairs"]).fetchall())
+    assert (1, 2, 1.0) in got
+    assert oracle == got
 
 
 def test_exact_dedup_matches_cc_variant(spark):
